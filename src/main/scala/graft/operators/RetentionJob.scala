@@ -32,6 +32,7 @@ object RetentionJob {
     val objects = doomed.flatMap(k => ObjectKey.Suffix.all.map(s => s"$k.${s.value}"))
       .filter(storage.exists)
     storage.deleteAll(objects)
+    doomed.foreach(SegmentFetchJob.invalidate(cfg.storageRoot, _))
     Report(doomed.size, objects.size, 0)
   }
 
@@ -43,10 +44,12 @@ object RetentionJob {
     val (manifested, logs) = segKeysOf(storage)
     val manifestSet = manifested.toSet
     val logSet = logs.toSet
-    val abortedLogs = logs.filterNot(manifestSet.contains).map(k => s"$k.${ObjectKey.Suffix.Log.value}")
-    val danglingManifests = manifested.filterNot(logSet.contains)
-      .map(k => s"$k.${ObjectKey.Suffix.Manifest.value}")
+    val abortedSegs = logs.filterNot(manifestSet.contains)
+    val danglingSegs = manifested.filterNot(logSet.contains)
+    val abortedLogs = abortedSegs.map(k => s"$k.${ObjectKey.Suffix.Log.value}")
+    val danglingManifests = danglingSegs.map(k => s"$k.${ObjectKey.Suffix.Manifest.value}")
     storage.deleteAll(abortedLogs ++ danglingManifests)
+    (abortedSegs ++ danglingSegs).foreach(SegmentFetchJob.invalidate(cfg.storageRoot, _))
     Report(0, abortedLogs.size + danglingManifests.size, abortedLogs.size + danglingManifests.size)
   }
 }

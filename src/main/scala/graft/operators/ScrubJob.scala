@@ -21,7 +21,8 @@ import graft.sources.{ObjectKey, StorageBackends}
   *     padded upload);
   *  3. `indexes-missing` / `indexes-size-mismatch` — the concatenated
   *     Kafka-index object vs the manifest's recorded extents;
-  *  4. `detransform-failed` — full decrypt+decompress pass; AES-256-GCM
+  *  4. `detransform-failed` — full decrypt+decompress pass over the
+  *     stored chunks (never the serving chunk cache); AES-256-GCM
   *     authenticates EVERY chunk, so any flipped bit in the ciphertext
   *     surfaces here as a tag failure (this is why the scrub needs no
   *     separate per-chunk checksum: the cipher tag IS the checksum);
@@ -53,9 +54,11 @@ object ScrubJob {
     def bad(issue: String, chunks: Int = 0, bytes: Long = 0L) =
       SegmentScrub(segKey, ok = false, issue, chunks, bytes, 0L)
 
-    val manifest =
-      try SegmentFetchJob.loadManifest(storage, segKey)
-      catch { case e: Exception => return bad(s"manifest-unreadable: ${e.getMessage}") }
+    val (manifest, spec) =
+      try {
+        val m = SegmentFetchJob.loadManifest(storage, segKey)
+        (m, SegmentFetchJob.specOf(m, cfg))
+      } catch { case e: Exception => return bad(s"manifest-unreadable: ${e.getMessage}") }
     val chunks = manifest.chunkIndex.chunks
     val nChunks = chunks.size
 
@@ -80,8 +83,11 @@ object ScrubJob {
     }
 
     val originalSize = manifest.chunkIndex.originalFileSize.toLong
+    // Reads storage, never the serving chunk cache: a chunk cached before
+    // the bit rot would otherwise pass the audit.
     val original =
-      try SegmentFetchJob.fetchRange(storage, cfg, segKey, BytesRange(0, originalSize - 1))
+      try SegmentFetchJob.readRange(manifest, BytesRange(0, originalSize - 1))(
+        SegmentFetchJob.loadChunk(storage, segKey, _, spec))
       catch { case e: Exception => return bad(s"detransform-failed: ${e.getMessage}", nChunks) }
     if (original.length.toLong != originalSize)
       return bad(s"length-mismatch: detransformed ${original.length} != manifest $originalSize",

@@ -47,6 +47,16 @@ final case class SegmentJobConfig(
 
   def keyPair: java.security.KeyPair = RsaKeyRing.deserialize(rsaPublicKey, rsaPrivateKey)
   def ring: RsaKeyRing = new RsaKeyRing(Map(keyId -> keyPair), keyId, wrapAlg)
+
+  /** Digest of the key material (key id + RSA pair). Every cache of
+    * unwrapped keys or plaintext carries it in its key, so a config holding
+    * a different key pair never reads what a previous caller decrypted. */
+  @transient private[graft] lazy val keyFingerprint: String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    md.update(keyId.getBytes("UTF-8")); md.update(0.toByte)
+    md.update(rsaPublicKey); md.update(rsaPrivateKey)
+    java.util.Base64.getEncoder.encodeToString(md.digest())
+  }
 }
 
 object SegmentJobConfig {
@@ -217,7 +227,7 @@ object SegmentUploadJob {
         catch { case _: Throwable => () }
         UploadResult(segKey, payload.length.toLong, -1L, -1, compressed = false,
           encrypted = cfg.encryption, success = false, error = String.valueOf(e.getMessage))
-    }
+    } finally SegmentFetchJob.invalidate(cfg.storageRoot, segKey)
   }
 }
 
@@ -246,7 +256,7 @@ object SegmentCompressionChecker {
 
 /** SURVEY §3.2 — `fetchLogSegment` both ways:
   *   - [[fetchRange]]: the serving path — manifest + ranged GETs + detransform
-  *     directly through the core library, no Spark job (sub-second point
+  *     through the C1 chunk cache, directly on the core library, no Spark job (sub-second point
   *     reads must not pay job-scheduling latency; same reuse the reference
   *     does with its transform classes).
   *   - [[chunksAsDataFrame]]: the analytic path — chunk metadata as rows for
@@ -270,7 +280,7 @@ object SegmentFetchJob {
   private val ReadableWrapAlgs = Set(
     SegmentManifest.WrapAlgOaepSha3512, SegmentManifest.WrapAlgOaepSha256)
 
-  private def specOf(m: SegmentManifest, cfg: SegmentJobConfig): TransformSpec = {
+  private[operators] def specOf(m: SegmentManifest, cfg: SegmentJobConfig): TransformSpec = {
     // The self-describing fields exist precisely so incompatibility fails
     // HERE with a clear message instead of as a BadPaddingException /
     // unknown-tag error mid-detransform (e.g. a manifest written by the
@@ -294,10 +304,12 @@ object SegmentFetchJob {
     * `MemorySegmentManifestCache` (C6/R10, default 1000 entries): segments
     * are immutable, so (parsed manifest + RSA-unwrapped data key) are
     * cacheable forever — re-parsing JSON and, worse, an RSA private-key op
-    * per point read otherwise dominates small-range latency. */
+    * per point read otherwise dominates small-range latency. Keyed by
+    * (root, key fingerprint, segment): the unwrapped data key is handed
+    * only to callers holding the key material that unwrapped it. */
   private final val ManifestCacheEntries = 1000
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (SegmentManifest, TransformSpec)]()
+  private val manifestCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, String), (SegmentManifest, TransformSpec)]()
 
   /** Mutating the map from inside a `computeIfAbsent` mapping function
     * violates the ConcurrentHashMap contract (two threads evicting on
@@ -306,9 +318,9 @@ object SegmentFetchJob {
     * the same manifest twice — manifests are immutable, so both loads
     * produce the same value and first-publish wins; a benign trade against
     * the deadlock. */
-  private def cachedManifestSpec(storage: graft.sources.StorageBackend, cfg: SegmentJobConfig,
-                                 segKey: String): (SegmentManifest, TransformSpec) = {
-    val key = (cfg.storageRoot, segKey)
+  private[graft] def cachedManifestSpec(storage: StorageBackend, cfg: SegmentJobConfig,
+                                        segKey: String): (SegmentManifest, TransformSpec) = {
+    val key = (cfg.storageRoot, cfg.keyFingerprint, segKey)
     val hit = manifestCache.get(key)
     if (hit != null) return hit
     val m = loadManifest(storage, segKey)
@@ -318,49 +330,106 @@ object SegmentFetchJob {
     if (prev != null) prev else loaded
   }
 
+  /** Drop everything this process has cached of segment `segKey` under
+    * `storageRoot` — manifest, data key and detransformed chunks, for every
+    * key fingerprint. `uploadOne` and the segment deletes call it, so a key
+    * written again in this process is never served from its old objects. A
+    * read still in flight while the key is rewritten may cache what it
+    * read; the caches assume no root reuses a segment key across processes. */
+  private[graft] def invalidate(storageRoot: String, segKey: String): Unit = {
+    manifestCache.keySet().removeIf(k => k._1 == storageRoot && k._3 == segKey)
+    chunkCache.invalidateIf { k =>
+      val parts = k.split('\u0000')
+      parts.length == 4 && parts(0) == storageRoot && parts(2) == segKey
+    }
+  }
+
+  /** The one chunk loader of every read path: ranged GET of the chunk's
+    * transformed bytes, then the strict size checks, the GCM tag check and
+    * decompression (`TransformPipeline.detransform`). Callers bring the
+    * manifest's spec — the cached one on the serving and DSv2 paths, a
+    * freshly loaded one in the scrub. */
+  private[graft] def loadChunk(storage: StorageBackend, segKey: String, chunk: Chunk,
+                               spec: TransformSpec): Array[Byte] = {
+    val raw = storage.fetchRangeBytes(s"$segKey.${ObjectKey.Suffix.Log.value}", chunk.transformedRange)
+    TransformPipeline.detransform(Iterator.single(raw), Vector(chunk), spec).next()
+  }
+
+  /** C1 — the serving path's process-wide cache of detransformed chunks
+    * (`ChunkCache.java:75-138`: byte-weighted, single-flight, 600 s TTL).
+    * Budget fixed at min(256 MiB, max heap / 8), the DSv2 `read.cache.bytes`
+    * default. Keys are (root, key fingerprint, segment, chunk id). Uploads
+    * and deletes in this process drop a segment's entries ([[invalidate]]);
+    * across processes the cache relies on segments being immutable: a root
+    * never reuses a segment key, and a segment deleted by another process is
+    * served until evicted or expired, as in the reference. */
+  private[operators] val ChunkCacheBytes: Long = math.min(256L << 20, Runtime.getRuntime.maxMemory / 8)
+  private val chunkCache = new LruByteCache(ChunkCacheBytes)
+
+  /** Read-only view of the serving chunk cache's counters. */
+  def chunkCacheStats: CacheStats = chunkCache.stats
+  def chunkCacheWeight: Long = chunkCache.currentWeight
+
   /** Serving path: fetch original bytes [from, to] of one segment. The range
     * is clamped to the segment size (ref `RemoteStorageManager.java:141-144`). */
   def fetchRange(cfg: SegmentJobConfig, segKey: String, range: BytesRange): Array[Byte] =
     fetchRange(StorageBackends.forRoot(cfg.storageRoot), cfg, segKey, range)
 
-  /** Same, over an already-resolved backend — callers iterating many
-    * segments (ScrubJob) resolve once and thread the handle through, so
-    * per-segment work never re-hits the provider registry. */
-  def fetchRange(storage: graft.sources.StorageBackend, cfg: SegmentJobConfig,
-                 segKey: String, range: BytesRange): Array[Byte] = {
-    val (m, cachedSpec) = cachedManifestSpec(storage, cfg, segKey)
+  /** Same, over an already-resolved backend — callers serving many fetches
+    * resolve once and thread the handle through, so per-fetch work never
+    * re-hits the provider registry. */
+  def fetchRange(storage: StorageBackend, cfg: SegmentJobConfig,
+                 segKey: String, range: BytesRange): Array[Byte] =
+    fetchRangeVia(chunkCache, storage, cfg, segKey, range)
+
+  /** [[fetchRange]] through a given chunk cache (specs pass a small one to
+    * exercise eviction). Only chunks that passed every check of
+    * [[loadChunk]] enter the cache; a failed load is never cached. */
+  private[operators] def fetchRangeVia(cache: LruByteCache, storage: StorageBackend,
+                                       cfg: SegmentJobConfig, segKey: String,
+                                       range: BytesRange): Array[Byte] = {
+    val (m, spec) = cachedManifestSpec(storage, cfg, segKey)
+    val prefix = s"${cfg.storageRoot}\u0000${cfg.keyFingerprint}\u0000$segKey\u0000"
+    readRange(m, range)(c => cache.getOrLoad(prefix + c.id)(loadChunk(storage, segKey, c, spec)))
+  }
+
+  /** [[fetchRange]] without the chunk cache, for one-pass readers (a DSv2
+    * scan without prefetch, the stats fallback, fetch benchmarks) that
+    * should neither fill the serving cache nor evict its hot chunks. */
+  private[graft] def fetchRangeUncached(storage: StorageBackend, cfg: SegmentJobConfig,
+                                        segKey: String, range: BytesRange): Array[Byte] = {
+    val (m, spec) = cachedManifestSpec(storage, cfg, segKey)
+    readRange(m, range)(loadChunk(storage, segKey, _, spec))
+  }
+
+  /** Original bytes [from, to] of the segment `m` describes, each chunk
+    * taken from `chunkBytes`. Each chunk's overlap with the clamped range is
+    * copied straight into the preallocated result: one copy per byte
+    * served, which matters on sub-chunk ranges. */
+  private[graft] def readRange(m: SegmentManifest, range: BytesRange)(
+      chunkBytes: Chunk => Array[Byte]): Array[Byte] = {
     val clamped = BytesRange(range.from, math.min(range.to, m.chunkIndex.originalFileSize - 1L))
     val chunks = m.chunkIndex.chunksForRange(clamped)
     if (chunks.isEmpty) return Array.emptyByteArray
-    val spec = cachedSpec
-    val logKey = s"$segKey.${ObjectKey.Suffix.Log.value}"
+    val out = new Array[Byte](clamped.size.toInt)
+    var outPos = 0
     // Interruption-as-cancellation (ref KafkaRemoteStorageManager.java:
     // 470-480, 532-546): the broker cancels in-flight fetches by
     // interrupting the serving thread — that is a RESULT (empty stream),
-    // not an error. Checked between chunks so a cancelled multi-chunk
-    // fetch stops paying for decrypt/decompress it will throw away.
-    val fetched = chunks.iterator.map { c =>
+    // not an error. Checked ahead of every chunk, cache hits included, so a
+    // cancelled multi-chunk fetch stops paying for decrypt/decompress it
+    // will throw away.
+    try chunks.foreach { c =>
       if (Thread.currentThread().isInterrupted)
         throw new InterruptedException("fetch cancelled")
-      storage.fetchRangeBytes(logKey, c.transformedRange)
-    }
-    // Each detransformed chunk's overlap with the clamped range is copied
-    // straight into the preallocated result — ONE copy per byte served
-    // (r10; the old BAOS + toByteArray + copyOfRange path copied every
-    // chunk byte three times, a measurable tax on sub-chunk ranges where
-    // decrypt amplification already dominates — see Bench's sub-range
-    // adjudication note).
-    val out = new Array[Byte](clamped.size.toInt)
-    var outPos = 0
-    var origPos = chunks.head.originalPosition.toLong
-    try TransformPipeline.detransform(fetched, chunks, spec).foreach { plain =>
+      val plain = chunkBytes(c)
+      val origPos = c.originalPosition.toLong
       val from = math.max(origPos, clamped.from)
       val to = math.min(origPos + plain.length - 1, clamped.to)
       if (to >= from) {
         System.arraycopy(plain, (from - origPos).toInt, out, outPos, (to - from + 1).toInt)
         outPos += (to - from + 1).toInt
       }
-      origPos += plain.length
     }
     catch { case _: InterruptedException => return Array.emptyByteArray }
     out
@@ -401,16 +470,9 @@ object SegmentFetchJob {
       .as[(String, Int)]
       .mapPartitions { it =>
         val st = StorageBackends.forRoot(cfgB.storageRoot)
-        val manifests = scala.collection.mutable.HashMap.empty[String, (SegmentManifest, TransformSpec)]
         it.map { case (segKey, chunkId) =>
-          val (m, spec) = manifests.getOrElseUpdate(segKey, {
-            val mm = loadManifest(st, segKey)
-            (mm, specOf(mm, cfgB))
-          })
-          val chunk = m.chunkIndex.chunks(chunkId)
-          val raw = st.fetchRangeBytes(s"$segKey.${ObjectKey.Suffix.Log.value}", chunk.transformedRange)
-          val plain = TransformPipeline.detransform(Iterator.single(raw), Vector(chunk), spec).next()
-          (segKey, chunkId, plain)
+          val (m, spec) = cachedManifestSpec(st, cfgB, segKey)
+          (segKey, chunkId, loadChunk(st, segKey, m.chunkIndex.chunks(chunkId), spec))
         }
       }
       .toDF("segment_key", "chunk_id", "bytes")

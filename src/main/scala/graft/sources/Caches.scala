@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, Executors, TimeUnit, TimeoutException}
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, ExecutionException, Executors, TimeUnit, TimeoutException}
 import scala.jdk.CollectionConverters._
 
 /** Cache statistics mirroring the reference's Caffeine stats surface
@@ -57,29 +57,48 @@ final class LruByteCache(
   }
 
   /** Read-through with single-flight: concurrent callers of the same key
-    * share one load (`ChunkCache.java:85-110`). */
+    * share one load (`ChunkCache.java:85-110`). The loader leaves `inflight`
+    * before it completes its future, so a waiter that retries never finds
+    * the finished future again. */
   def getOrLoad(key: String)(load: => Array[Byte]): Array[Byte] = {
-    get(key) match {
-      case Some(b) => b
-      case None =>
-        val mine = new CompletableFuture[Array[Byte]]()
-        val winner = inflight.putIfAbsent(key, mine)
-        if (winner != null) {
-          try winner.get(loadTimeoutMillis, TimeUnit.MILLISECONDS)
-          catch { case _: TimeoutException => throw new RuntimeException(s"cache load timeout for $key") }
-        } else {
-          try {
-            val t0 = System.nanoTime()
-            val b = load
-            synchronized { loadNanos += System.nanoTime() - t0 }
-            put(key, b)
+    var result: Array[Byte] = null
+    while (result == null) {
+      get(key) match {
+        case Some(b) => result = b
+        case None =>
+          val mine = new CompletableFuture[Array[Byte]]()
+          val winner = inflight.putIfAbsent(key, mine)
+          if (winner != null) {
+            try result = winner.get(loadTimeoutMillis, TimeUnit.MILLISECONDS)
+            catch {
+              case _: TimeoutException => throw new RuntimeException(s"cache load timeout for $key")
+              case e: ExecutionException => e.getCause match {
+                // the loading caller was cancelled, not the load: load again
+                case _: InterruptedException | _: java.io.InterruptedIOException |
+                     _: java.nio.channels.ClosedByInterruptException => ()
+                // the load's own failure, as the loading caller saw it
+                case cause => throw cause
+              }
+            }
+          } else {
+            val b =
+              try {
+                val t0 = System.nanoTime()
+                val b = load
+                synchronized { loadNanos += System.nanoTime() - t0 }
+                put(key, b)
+                b
+              } catch {
+                case e: Throwable =>
+                  inflight.remove(key, mine); mine.completeExceptionally(e); throw e
+              }
+            inflight.remove(key, mine)
             mine.complete(b)
-            b
-          } catch {
-            case e: Throwable => mine.completeExceptionally(e); throw e
-          } finally inflight.remove(key)
-        }
+            result = b
+          }
+      }
     }
+    result
   }
 
   def stats: CacheStats = synchronized(CacheStats(hits, misses, evictions, loadNanos))
@@ -90,6 +109,15 @@ final class LruByteCache(
     map.keySet().asScala.toVector
   }
   def invalidateAll(): Unit = synchronized { map.clear(); weight = 0L }
+
+  /** Drop every entry whose key matches `p`. */
+  def invalidateIf(p: String => Boolean): Unit = synchronized {
+    val it = map.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (p(e.getKey)) { weight -= e.getValue.bytes.length; it.remove() }
+    }
+  }
 }
 
 /** Disk-backed chunk cache: temp-file write + ATOMIC_MOVE into the cache dir
@@ -145,23 +173,17 @@ final class CachingChunkFetcher(
     prefetchMaxBytes: Long = 0L,
     prefetchThreads: Int = 4) {
   import graft.core._
-  import graft.core.transform._
   import graft.operators.SegmentFetchJob
 
   private val storage = StorageBackends.forRoot(cfg.storageRoot)
   private val pool = Executors.newFixedThreadPool(prefetchThreads, r => {
     val t = new Thread(r, "graft-prefetch"); t.setDaemon(true); t
   })
-  private val manifests = new ConcurrentHashMap[String, SegmentManifest]()
-
+  /** Manifest + unwrapped data key from the serving path's bounded cache:
+    * one RSA unwrap per segment, and the same fail-fast codec and
+    * wrap-algorithm checks. */
   private def manifest(segKey: String): SegmentManifest =
-    manifests.computeIfAbsent(segKey, k => SegmentFetchJob.loadManifest(storage, k))
-
-  private def spec(m: SegmentManifest): TransformSpec = {
-    val key = m.encryption.map(e => cfg.ring.unwrapDataKey(e.keyId, e.wrappedDataKey, e.wrapAlg))
-    TransformSpec(m.chunkIndex.originalChunkSize, m.compression, key,
-      m.encryption.map(_.aad).getOrElse(Array.emptyByteArray), m.compressionCodec)
-  }
+    SegmentFetchJob.cachedManifestSpec(storage, cfg, segKey)._1
 
   /** Whole segment assembled chunk-by-chunk through the cache — the DSv2
     * partition reader's entry. Unlike one monolithic ranged GET, each
@@ -193,10 +215,8 @@ final class CachingChunkFetcher(
   }
 
   private def loadChunk(segKey: String, chunkId: Int): Array[Byte] = {
-    val m = manifest(segKey)
-    val chunk = m.chunkIndex.chunks(chunkId)
-    val raw = storage.fetchRangeBytes(s"$segKey.${ObjectKey.Suffix.Log.value}", chunk.transformedRange)
-    TransformPipeline.detransform(Iterator.single(raw), Vector(chunk), spec(m)).next()
+    val (m, spec) = SegmentFetchJob.cachedManifestSpec(storage, cfg, segKey)
+    SegmentFetchJob.loadChunk(storage, segKey, m.chunkIndex.chunks(chunkId), spec)
   }
 
   private def schedulePrefetch(segKey: String, afterChunk: Int): Unit = {

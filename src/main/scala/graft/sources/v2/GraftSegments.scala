@@ -182,10 +182,7 @@ private[graft] object SegmentsReadCache {
 
   def forConf(cfg: graft.operators.SegmentJobConfig, prefetchBytes: Long,
               cacheBytes: Long): (graft.sources.LruByteCache, graft.sources.CachingChunkFetcher) = {
-    val keyHash = java.util.Base64.getEncoder.encodeToString(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(cfg.rsaPublicKey ++ cfg.rsaPrivateKey))
-    fetchers.computeIfAbsent(s"${cfg.storageRoot}#$keyHash#$prefetchBytes#$cacheBytes", _ => {
+    fetchers.computeIfAbsent(s"${cfg.storageRoot}#${cfg.keyFingerprint}#$prefetchBytes#$cacheBytes", _ => {
       val cache = new graft.sources.LruByteCache(cacheBytes)
       (cache, new graft.sources.CachingChunkFetcher(cfg, cache, prefetchBytes))
     })
@@ -848,7 +845,9 @@ final class SegmentsReader(conf: GraftSegments.SourceConf, required: StructType,
         SegmentsReadCache.forConf(conf.jobConfig, conf.prefetchBytes, conf.cacheBytes)._2
           .segmentBytes(segKey)
       else
-        SegmentFetchJob.fetchRange(conf.jobConfig, segKey, BytesRange(0L, Long.MaxValue - 1L))
+        // one pass over the segment: read storage, not the serving cache
+        SegmentFetchJob.fetchRangeUncached(conf.storage, conf.jobConfig, segKey,
+          BytesRange(0L, Long.MaxValue - 1L))
     var toSkip = skipRows
     KafkaWireCodec.parseSegment(bytes).iterator.flatMap { b =>
       // batch-level skip of a pushed OFFSET's remainder: drop whole-batch
@@ -1002,7 +1001,7 @@ final class SegmentsAggReader(conf: GraftSegments.SourceConf,
         // fallback — parse THIS segment's payload; other segments still
         // answer from metadata
         payloadFallbackReads.incrementAndGet()
-        val bytes = SegmentFetchJob.fetchRange(conf.jobConfig, segKey,
+        val bytes = SegmentFetchJob.fetchRangeUncached(storage, conf.jobConfig, segKey,
           BytesRange(0L, Long.MaxValue - 1L))
         graft.operators.SegmentUploadJob.recordStatsOf(bytes).getOrElse(
           throw new IllegalStateException(
@@ -1081,6 +1080,7 @@ final class SegmentsWrite(conf: GraftSegments.SourceConf, schema: StructType)
     val storage = conf.storage
     messages.collect { case SegmentsCommitMessage(keys) => keys }.flatten.foreach { seg =>
       graft.sources.ObjectKey.Suffix.all.foreach(s => storage.delete(s"$seg.${s.value}"))
+      SegmentFetchJob.invalidate(conf.jobConfig.storageRoot, seg)
     }
   }
 }
@@ -1151,8 +1151,10 @@ final class SegmentsDataWriter(conf: GraftSegments.SourceConf, schema: StructTyp
 
   override def abort(): Unit = {
     val storage = conf.storage
-    uploaded.foreach(seg =>
-      graft.sources.ObjectKey.Suffix.all.foreach(s => storage.delete(s"$seg.${s.value}")))
+    uploaded.foreach { seg =>
+      graft.sources.ObjectKey.Suffix.all.foreach(s => storage.delete(s"$seg.${s.value}"))
+      SegmentFetchJob.invalidate(conf.jobConfig.storageRoot, seg)
+    }
   }
 
   override def close(): Unit = buffered.clear()

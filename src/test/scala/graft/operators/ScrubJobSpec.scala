@@ -56,6 +56,20 @@ class ScrubJobSpec extends SparkSpec {
     assert(m("scrub-seg-00")._1 && m("scrub-seg-02")._1, "untouched segments stay ok")
   }
 
+  test("scrub reads storage, not the serving chunk cache") {
+    val (cfg, segs) = freshStore()
+    val (key, payload) = segs(1)
+    // a full serving fetch puts every chunk of the segment in the cache
+    assert(java.util.Arrays.equals(SegmentFetchJob.fetchRange(cfg, key,
+      graft.core.BytesRange(0, payload.length - 1L)), payload))
+    val log = Paths.get(cfg.storageRoot, s"$key.log")
+    val bytes = Files.readAllBytes(log)
+    bytes(bytes.length / 3) = (bytes(bytes.length / 3) ^ 0x01).toByte
+    Files.write(log, bytes)
+    val m = scrubMap(cfg)
+    assert(m(key)._2.startsWith("detransform-failed"), m(key)._2)
+  }
+
   test("truncated log -> log-size-mismatch; deleted log -> log-missing") {
     val (cfg, _) = freshStore()
     val log0 = Paths.get(cfg.storageRoot, "scrub-seg-00.log")

@@ -105,6 +105,153 @@ class SegmentJobsSpec extends SparkSpec {
     }
   }
 
+  /** Storage that records every ranged GET of a log object. */
+  private final class CountingStorage(real: graft.sources.StorageBackend)
+      extends graft.sources.StorageBackend {
+    val logGets = new java.util.concurrent.ConcurrentLinkedQueue[BytesRange]()
+    def logGetCount: Int = logGets.size
+    override def upload(in: java.io.InputStream, key: String): Long = real.upload(in, key)
+    override def fetch(key: String) = real.fetch(key)
+    override def fetchRange(key: String, range: BytesRange) = {
+      if (key.endsWith(".log")) logGets.add(range)
+      real.fetchRange(key, range)
+    }
+    override def delete(key: String): Unit = real.delete(key)
+    override def exists(key: String) = real.exists(key)
+    override def size(key: String) = real.size(key)
+    override def listKeys(prefix: String) = real.listKeys(prefix)
+  }
+
+  /** One compressed + encrypted 30000-byte segment in 4 KiB chunks (8 of
+    * them), in a fresh store, behind a [[CountingStorage]]. */
+  private def servingSegment(): (SegmentJobConfig, CountingStorage, String, Array[Byte]) = {
+    val store = tmpDir("graft-serve-cache")
+    val cfg = SegmentJobConfig.withGeneratedKeys(store).copy(chunkSize = 4096)
+    val payload = new Array[Byte](30000)
+    new java.util.Random(5).nextBytes(payload)
+    java.util.Arrays.fill(payload, 15000, 30000, 3.toByte)
+    val storage = new CountingStorage(FileSystemStorage(store))
+    assert(SegmentUploadJob.uploadOne(storage, cfg.ring, None, cfg, "serve-seg", payload).success)
+    (cfg, storage, "serve-seg", payload)
+  }
+
+  private def slice(b: Array[Byte], from: Long, to: Long) =
+    java.util.Arrays.copyOfRange(b, from.toInt, (math.min(to, b.length - 1L) + 1).toInt)
+
+  test("chunk cache: consecutive sub-chunk ranges cost one storage GET per chunk") {
+    val (cfg, storage, seg, payload) = servingSegment()
+    val hits0 = SegmentFetchJob.chunkCacheStats.hits
+    // 1000-byte catch-up reads over the 4096-byte grid: every fourth or so
+    // straddles a chunk boundary, and every chunk is touched several times
+    (0L until payload.length.toLong by 1000L).foreach { from =>
+      val got = SegmentFetchJob.fetchRange(storage, cfg, seg, BytesRange(from, from + 999))
+      assert(java.util.Arrays.equals(got, slice(payload, from, from + 999)), s"range at $from")
+    }
+    import scala.jdk.CollectionConverters._
+    val gets = storage.logGets.asScala.toVector
+    assert(gets.size == 8 && gets.distinct.size == 8, s"one GET per chunk expected, got $gets")
+    assert(SegmentFetchJob.chunkCacheStats.hits - hits0 >= 30 - 8)
+    // a whole-segment read is now served from memory
+    val whole = SegmentFetchJob.fetchRange(storage, cfg, seg, BytesRange(0, payload.length - 1L))
+    assert(java.util.Arrays.equals(whole, payload) && storage.logGetCount == 8)
+  }
+
+  test("chunk cache: cancellation on a cache hit still returns an empty result") {
+    val (cfg, storage, seg, payload) = servingSegment()
+    assert(SegmentFetchJob.fetchRange(storage, cfg, seg, BytesRange(0, 999)).length == 1000)
+    val gets = storage.logGetCount
+    Thread.currentThread().interrupt()
+    try {
+      val r = SegmentFetchJob.fetchRange(storage, cfg, seg, BytesRange(0, 999))
+      assert(r.isEmpty, "a cancelled fetch yields an empty result even when the chunk is cached")
+    } finally Thread.interrupted()
+    assert(storage.logGetCount == gets)
+    assert(java.util.Arrays.equals(
+      SegmentFetchJob.fetchRange(storage, cfg, seg, BytesRange(0, 999)), slice(payload, 0, 999)))
+  }
+
+  test("chunk cache: a tampered chunk fails on every fetch (failures are never cached)") {
+    val (cfg, storage, seg, payload) = servingSegment()
+    // chunk 0 cached before the tamper; chunk 2 never fetched
+    assert(SegmentFetchJob.fetchRange(storage, cfg, seg, BytesRange(0, 99)).length == 100)
+    val m = SegmentFetchJob.loadManifest(storage, seg)
+    val c2 = m.chunkIndex.chunks(2)
+    val log = java.nio.file.Paths.get(cfg.storageRoot, s"$seg.log")
+    val bytes = Files.readAllBytes(log)
+    val at = c2.transformedPosition + c2.transformedSize / 2
+    bytes(at) = (bytes(at) ^ 0x01).toByte
+    Files.write(log, bytes)
+    val inChunk2 = BytesRange(2 * 4096L + 10, 2 * 4096L + 20)
+    (1 to 3).foreach { i =>
+      val before = storage.logGetCount
+      intercept[Exception](SegmentFetchJob.fetchRange(storage, cfg, seg, inChunk2))
+      assert(storage.logGetCount == before + 1, s"attempt $i must re-read storage")
+    }
+    // the untouched, cached chunk still serves
+    assert(java.util.Arrays.equals(
+      SegmentFetchJob.fetchRange(storage, cfg, seg, BytesRange(0, 99)), slice(payload, 0, 99)))
+  }
+
+  test("chunk cache: weight never exceeds the budget; CacheStats count evictions") {
+    assert(SegmentFetchJob.ChunkCacheBytes ==
+      math.min(256L << 20, Runtime.getRuntime.maxMemory / 8))
+    val (cfg, storage, seg, payload) = servingSegment()
+    // the serving code path over a three-chunk budget, from 4 threads
+    val budget = 3L * 4096
+    val cache = new graft.sources.LruByteCache(budget)
+    val over = new java.util.concurrent.atomic.AtomicLong(0L)
+    val bad = new java.util.concurrent.atomic.AtomicInteger(0)
+    val threads = (0 until 4).map { t =>
+      new Thread(() => {
+        val r = new java.util.Random(t)
+        (0 until 50).foreach { _ =>
+          val from = r.nextInt(payload.length).toLong
+          val to = from + r.nextInt(6000)
+          val got = SegmentFetchJob.fetchRangeVia(cache, storage, cfg, seg, BytesRange(from, to))
+          if (!java.util.Arrays.equals(got, slice(payload, from, to))) bad.incrementAndGet()
+          over.accumulateAndGet(cache.currentWeight, (a, b) => math.max(a, b))
+        }
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join(60000))
+    assert(!threads.exists(_.isAlive))
+    assert(bad.get == 0)
+    assert(over.get <= budget, s"weight ${over.get} over budget $budget")
+    val st = cache.stats
+    assert(st.evictions > 0 && st.hits > 0 && st.misses > 0, st.toString)
+    assert(SegmentFetchJob.chunkCacheWeight <= SegmentFetchJob.ChunkCacheBytes)
+  }
+
+  test("chunk cache: a key written again or deleted in this process is not served from the cache") {
+    val (cfg, storage, seg, payload) = servingSegment()
+    assert(java.util.Arrays.equals(
+      SegmentFetchJob.fetchRange(storage, cfg, seg, BytesRange(0, payload.length - 1L)), payload))
+    val next = payload.map(b => (b ^ 0x5a).toByte)
+    assert(SegmentUploadJob.uploadOne(storage, cfg.ring, None, cfg, seg, next).success)
+    assert(java.util.Arrays.equals(
+      SegmentFetchJob.fetchRange(storage, cfg, seg, BytesRange(0, payload.length - 1L)), next),
+      "the re-uploaded payload must be served, not the cached one")
+    assert(RetentionJob.deleteSegments(cfg, _ == seg).segmentsDeleted == 1)
+    intercept[Exception](SegmentFetchJob.fetchRange(storage, cfg, seg, BytesRange(0, 99)))
+  }
+
+  test("caches carry the key material: a foreign key pair cannot read a cached segment") {
+    val (cfg, storage, seg, payload) = servingSegment()
+    // the right keys fill the manifest/data-key cache and the chunk cache
+    assert(java.util.Arrays.equals(
+      SegmentFetchJob.fetchRange(storage, cfg, seg, BytesRange(0, payload.length - 1L)), payload))
+    val foreign = SegmentJobConfig.withGeneratedKeys(cfg.storageRoot).copy(chunkSize = 4096)
+    intercept[Exception](SegmentFetchJob.fetchRange(storage, foreign, seg, BytesRange(0, 99)))
+    intercept[Exception](SegmentFetchJob.fetchRange(foreign, seg, BytesRange(0, 99)))
+    // an equal config (same key material) still reads from the caches
+    val gets = storage.logGetCount
+    val same = cfg.copy(rsaPublicKey = cfg.rsaPublicKey.clone(), rsaPrivateKey = cfg.rsaPrivateKey.clone())
+    assert(java.util.Arrays.equals(
+      SegmentFetchJob.fetchRange(storage, same, seg, BytesRange(0, 99)), slice(payload, 0, 99)))
+    assert(storage.logGetCount == gets)
+  }
+
   test("incompatible manifest fields fail fast with a clear message (wrapAlg / codec)") {
     import graft.core.SegmentManifest
     val in = tmpDir("graft-compat-in")

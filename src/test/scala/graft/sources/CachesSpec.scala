@@ -46,6 +46,44 @@ class CachesSpec extends AnyFunSuite {
     assert(c.stats.hits + c.stats.misses >= 8)
   }
 
+  test("lru: waiters see the load's failure, but load again when only the loader was cancelled") {
+    val c = new LruByteCache(1 << 20)
+    def waiterOf(fail: Throwable): Either[Throwable, Array[Byte]] = {
+      val started = new java.util.concurrent.CountDownLatch(1)
+      val release = new java.util.concurrent.CountDownLatch(1)
+      val key = fail.getClass.getName
+      val loader = new Thread(() => {
+        try c.getOrLoad(key) { started.countDown(); release.await(); throw fail }
+        catch { case _: Throwable => () }
+      })
+      loader.start()
+      started.await()
+      @volatile var got: Either[Throwable, Array[Byte]] = null
+      val waiter = new Thread(() => {
+        got = try Right(c.getOrLoad(key)(Array[Byte](5))) catch { case t: Throwable => Left(t) }
+      })
+      waiter.start()
+      // release the load only once the waiter is parked on it
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (waiter.getState != Thread.State.TIMED_WAITING && System.nanoTime() < deadline)
+        Thread.sleep(5)
+      release.countDown()
+      loader.join(10000); waiter.join(10000)
+      got
+    }
+    val bad = new IllegalStateException("tag mismatch")
+    assert(waiterOf(bad) == Left(bad), "a failed load reaches its waiters unwrapped")
+    assert(waiterOf(new java.nio.channels.ClosedByInterruptException).exists(_.sameElements(Array[Byte](5))),
+      "a cancelled loader must not fail the other callers of the same key")
+  }
+
+  test("lru: invalidateIf drops only the matching entries and their weight") {
+    val c = new LruByteCache(1 << 20)
+    Seq("a#0" -> 10, "a#1" -> 20, "b#0" -> 40).foreach { case (k, n) => c.put(k, new Array[Byte](n)) }
+    c.invalidateIf(_.startsWith("a#"))
+    assert(c.cachedKeys == Vector("b#0") && c.currentWeight == 40)
+  }
+
   test("lru: hit/miss stats") {
     val c = new LruByteCache(1000)
     c.getOrLoad("x")(Array[Byte](1))

@@ -688,6 +688,32 @@ class GraftSegmentsSourceSpec extends SparkSpec {
     assert(viaSource == viaParse)
   }
 
+  test("a scan without read.prefetch.bytes reads storage, not the serving chunk cache") {
+    val (store, cfg, keys) = setup()
+    val st0 = graft.operators.SegmentFetchJob.chunkCacheStats
+    val w0 = graft.operators.SegmentFetchJob.chunkCacheWeight
+    assert(reader(store, cfg).load().select(col("value_raw")).collect().nonEmpty)
+    val st1 = graft.operators.SegmentFetchJob.chunkCacheStats
+    assert(st1.hits == st0.hits && st1.misses == st0.misses, s"$st0 -> $st1")
+    assert(graft.operators.SegmentFetchJob.chunkCacheWeight == w0)
+  }
+
+  test("read.prefetch.bytes: an unknown manifest codec fails fast on the chunk-cache path") {
+    val (store, cfg, keys) = setup()
+    val storage = FileSystemStorage(store)
+    val seg = keys.head
+    val m = graft.core.SegmentManifest.fromJson(
+      new String(storage.fetchBytes(s"$seg.rsm-manifest"), "UTF-8"))
+    assert(m.compression)
+    storage.uploadBytes(storage.fetchBytes(s"$seg.log"), s"$seg-x.log")
+    storage.uploadBytes(m.copy(compressionCodec = "snappy").toJson.getBytes("UTF-8"),
+      s"$seg-x.rsm-manifest")
+    val e = intercept[Exception](reader(store, cfg).option("read.prefetch.bytes", (1L << 20).toString)
+      .load().where(col("segment_key") === s"$seg-x").select(col("value_raw")).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("incompatible compression codec")), e.toString)
+  }
+
   test("read.prefetch.bytes: C2 chunk cache serves re-scans; prefetch pulls surplus chunks") {
     import graft.sources.v2.SegmentsReadCache
     SegmentsReadCache.reset()
